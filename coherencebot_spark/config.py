@@ -62,12 +62,6 @@ class CrawlConfig:
     # updatedb shuffle (sharded per-host-bucket blooms, built once —
     # the frontier key-set is frozen when additions are off)
     use_url_seen: bool = False
-    # membership structure for the URL-seen shards (north rule
-    # "bloom/cuckoo"): 'bloom' (~1.2 B/url, fpp 1%) or 'cuckoo'
-    # (~4 B/url, fpp ≤0.012% and in-place deletion — see
-    # functions/hashing.CuckooFilter).  Shards on disk self-describe;
-    # switching backend mid-crawl triggers a one-time full shard rebuild
-    url_seen_backend: str = "bloom"
     # size gate for the URL-seen probe's broadcast route: when the
     # frontier-size estimate prices the WHOLE shard table under this many
     # bytes (~1.2 B/url at 1% fpp), the probe broadcasts the shards and

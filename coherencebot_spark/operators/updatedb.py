@@ -432,7 +432,7 @@ def updatedb(frontier: DataFrame, fetch_log: DataFrame,
     meta_out = F.when(
         has_fetch | has_link,
         F.map_filter(_mcoal(meta_out), lambda k, _: k != F.lit("_ngt_")),
-    ).otherwise(_mcoal(meta_out))
+    ).otherwise(meta_out)
 
     result = g.select(
         "url",
@@ -451,7 +451,7 @@ def updatedb(frontier: DataFrame, fetch_log: DataFrame,
         # untouched rows are identity under the cascade (no fetch, no
         # link): eff_status = LINKED with has_old ⇒ every cascade arm
         # selects the old field, link_cash coalesces to 0, and the
-        # metadata arm reduces to map-coalesce — reproduced here as a
+        # metadata arm passes the old map through — reproduced here as a
         # plain projection so the 10^10-row side never evaluates the
         # state machine (asserted equal by the oracle-gated updatedb
         # queries and the schedule/state-matrix tests)
@@ -466,7 +466,7 @@ def updatedb(frontier: DataFrame, fetch_log: DataFrame,
             uo["score"].cast("float").alias("score"),
             uo["signature"].alias("signature"),
             uo["modified_time"].cast("long").alias("modified_time"),
-            _mcoal(uo["metadata"]).alias("metadata"),
+            uo["metadata"].alias("metadata"),
         ))
 
     # SC5 withdrawn filter (fork-specific): seed no longer in service

@@ -108,12 +108,6 @@ class CrawlDriver:
         # POSTs these to its ES dashboard; the files ARE the payloads)
         self.analyze = analyze
         self.fetch_kwargs = fetch_kwargs
-        # URL-seen shard backend actually on disk ("cuckoo" | "bloom"),
-        # detected once from the shard schema then cached — the
-        # switch-detection probe in _refresh_seen_blooms otherwise costs
-        # a parquet schema read per cycle (local-fs cheap, object-store
-        # LIST+HEAD per refresh at scale)
-        self._seen_backend_on_disk: str | None = None
         # session-cached URL-seen shard frame (localCheckpoint'ed): the
         # shard table is immutable between refreshes, so the read +
         # checkpoint job runs once per on-disk version, not once per
@@ -175,6 +169,12 @@ class CrawlDriver:
             F.xxhash64("host"), F.lit(int(self.cfg.host_buckets))
         ).cast("int")
 
+    def _frontier_size_estimate(self) -> int | None:
+        """The ``frontier_size`` metric of the newest frontier snapshot
+        (no Spark job); None before any snapshot carries it."""
+        hist = self.frontier.history()
+        return (hist[-1]["metrics"] or {}).get("frontier_size") if hist else None
+
     def _refresh_seen_blooms(self, touched: list[int] | None,
                              frontier_df: DataFrame | None = None) -> None:
         """(Re)build URL-seen bloom shards.  ``touched=None`` rebuilds
@@ -191,59 +191,22 @@ class CrawlDriver:
         (false negatives → double-insert on the next cycle; the
         committed-cycle resume path is an early-return no-op and could
         never repair it)."""
-        from ..functions.hashing import (build_bloom_sharded,
-                                         build_cuckoo_sharded)
+        from ..functions.hashing import build_bloom_sharded
 
-        n_buckets = int(self.cfg.host_buckets)
-        want_cuckoo = self.cfg.url_seen_backend == "cuckoo"
-        switched = False
-        if os.path.exists(self._blooms_path):
-            # backend switched mid-crawl: a touched-only dynamic
-            # overwrite would leave stale other-backend shards in the
-            # untouched buckets — rebuild everything, staged to a side
-            # path (the rebuild's own lineage may still probe the OLD
-            # shards; deleting them first races the job) then swapped.
-            # The on-disk backend is detected from the shard schema once
-            # and cached (shards self-describe; only this driver writes
-            # them, so the cache can only go stale if an external actor
-            # rewrites the path mid-session — not a supported mode).
-            if self._seen_backend_on_disk is None:
-                have = self.spark.read.parquet(self._blooms_path).columns
-                self._seen_backend_on_disk = (
-                    "cuckoo" if "table" in have else "bloom")
-            if (self._seen_backend_on_disk == "cuckoo") != want_cuckoo:
-                switched = True
-                touched = None
         if frontier_df is not None:
             frontier = frontier_df
         else:
             frontier = self.frontier.read(self.spark)
         if touched is not None:
             frontier = frontier.filter(F.col("bucket").isin(touched))
-        hist = self.frontier.history()
-        cap = ((hist[-1]["metrics"] or {}).get("frontier_size")
-               if hist else None) or max(frontier.count(), 1024)
-        builder = (build_cuckoo_sharded
-                   if self.cfg.url_seen_backend == "cuckoo"
-                   else build_bloom_sharded)
-        built = builder(
-            frontier, "url", int(cap), n_buckets,
+        cap = self._frontier_size_estimate() or max(frontier.count(), 1024)
+        built = build_bloom_sharded(
+            frontier, "url", int(cap), int(self.cfg.host_buckets),
             bucket_expr=F.col("bucket").cast("int"),
         )
-        if switched:
-            import shutil
-            staged = self._blooms_path + ".next"
-            if os.path.exists(staged):
-                shutil.rmtree(staged)
-            (built.write.mode("overwrite")
-             .partitionBy("bucket").parquet(staged))
-            shutil.rmtree(self._blooms_path)
-            os.rename(staged, self._blooms_path)
-        else:
-            (built.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket").parquet(self._blooms_path))
-        self._seen_backend_on_disk = "cuckoo" if want_cuckoo else "bloom"
+        (built.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(self._blooms_path))
         self._blooms_df = None  # on-disk shards changed: drop the cache
 
     def _load_or_build_blooms(self) -> DataFrame:
@@ -268,38 +231,27 @@ class CrawlDriver:
         return self._blooms_df
 
     def _probe_seen(self, parse_out: DataFrame):
-        """(non-linked rows, linked rows with a ``maybe_seen`` flag).
-        The prober follows the SHARDS' schema, not the config — shards
-        on disk self-describe (cuckoo rows carry ``table``, bloom rows
-        ``bits``), so a backend switch stays correct between the config
-        change and the next shard refresh."""
-        from ..functions.hashing import (BloomFilter,
-                                         bloom_contains_broadcast,
+        """(non-linked rows, linked rows with a ``maybe_seen`` flag)."""
+        from ..functions.hashing import (bloom_contains_broadcast,
                                          bloom_contains_sharded,
-                                         cuckoo_contains_sharded)
+                                         bloom_shard_params)
 
         blooms = self._load_or_build_blooms()
         linked = parse_out.filter(F.col("status") == int(Msg.LINKED))
         rest = parse_out.filter(F.col("status") != int(Msg.LINKED))
         n_buckets = int(self.cfg.host_buckets)
-        prober = (cuckoo_contains_sharded if "table" in blooms.columns
-                  else bloom_contains_sharded)
-        if prober is bloom_contains_sharded:
-            # scale-adaptive probe route (guide §3.1): estimate total
-            # shard bytes from the frontier-size metric (no Spark job —
-            # the same estimate _refresh_seen_blooms sizes shards with)
-            # and broadcast the whole shard table when it fits, making
-            # the probe a shuffle-free mapInPandas.  Unknown size (no
-            # metric yet) or past the gate → the cogroup path.
-            hist = self.frontier.history()
-            cap = ((hist[-1]["metrics"] or {}).get("frontier_size")
-                   if hist else None)
-            if cap is not None:
-                m, _ = BloomFilter.params(
-                    max(int(cap) // n_buckets, 1024))
-                if (m // 8) * n_buckets <= int(
-                        self.cfg.url_seen_broadcast_max_bytes):
-                    prober = bloom_contains_broadcast
+        # scale-adaptive probe route (guide §3.1): price the whole shard
+        # table from the frontier-size estimate the shards were sized
+        # with (no Spark job) and broadcast it when it fits, making the
+        # probe a shuffle-free mapInPandas.  Unknown size (no metric
+        # yet) or past the gate → the cogroup path.
+        prober = bloom_contains_sharded
+        cap = self._frontier_size_estimate()
+        if cap is not None:
+            m, _ = bloom_shard_params(int(cap), n_buckets)
+            if (m // 8) * n_buckets <= int(
+                    self.cfg.url_seen_broadcast_max_bytes):
+                prober = bloom_contains_broadcast
         probed = prober(
             linked, "url", blooms, n_buckets=n_buckets,
             bucket_expr=self._host_bucket_expr(),
@@ -662,8 +614,7 @@ class CrawlDriver:
             # partition-pruned to the touched buckets — no full-frontier
             # job in a merge cycle (the fallback full count only runs for
             # pre-metric legacy snapshots, and is counted for tests).
-            hist = self.frontier.history()
-            parent_size = (hist[-1]["metrics"] or {}).get("frontier_size")
+            parent_size = self._frontier_size_estimate()
             label("commit:new_count")
             new_touched_rows = new_frontier.count()
             if parent_size is not None:

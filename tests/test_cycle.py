@@ -128,12 +128,43 @@ def test_url_seen_filter_cycle_identity(spark, tmp_path):
     assert os.path.exists(str(tmp_path / "seen" / "url_seen_blooms"))
 
 
-def test_url_seen_additions_on_cycle_identity(spark, tmp_path):
+def _exact_new_links(spark, d, parent: int) -> tuple[int, int]:
+    """(distinct LINKED targets of the newest segment absent from
+    frontier snapshot ``parent``, all distinct LINKED targets)."""
+    from pyspark.sql import functions as F
+
+    from coherencebot_spark.operators.parse import parse, redirect_link_rows
+    from coherencebot_spark.status import Msg
+
+    log = d.fetch_log.read(spark)
+    linked = (
+        parse(log, d.content.read(spark), d.cfg)
+        .unionByName(redirect_link_rows(log))
+        .filter(F.col("status") == int(Msg.LINKED))
+        .select("url").distinct()
+    )
+    exact = linked.join(d.frontier.read(spark, parent).select("url"),
+                        "url", "left_anti").count()
+    return exact, linked.count()
+
+
+@pytest.mark.parametrize(
+    "max_bytes", [DEFAULT.url_seen_broadcast_max_bytes, 0],
+    ids=["broadcast", "cogroup"])
+def test_url_seen_additions_on_cycle_identity(spark, tmp_path, max_bytes):
     """additions-ON + URL-seen: definitely-new links take the direct
     new-row path, shards are refreshed per cycle from the committed
     frontier — across multiple cycles the frontier is IDENTICAL to the
     unfiltered plan (a stale shard would double-insert existing urls;
-    a false drop would lose links — both diverge here)."""
+    a false drop would lose links — both diverge here).  Runs both probe
+    arms: the default size gate broadcasts the shard table, a zero gate
+    forces the bucket cogroup.
+
+    Also pins the invariant ``new_links`` relies on: it is counted as
+    |linked| − |frontier ⋉ linked|, which equals the exact anti-join
+    count only while frontier urls are unique.  Cycles are a fetch
+    interval apart, so cycle 1 refetches pages that link to urls the
+    frontier already holds."""
     import os
 
     def snap(d):
@@ -142,63 +173,34 @@ def test_url_seen_additions_on_cycle_identity(spark, tmp_path):
             for r in d.frontier.read(spark).collect()
         )
 
+    cfg = CFG.with_(use_url_seen=True, url_seen_broadcast_max_bytes=max_bytes)
     for bucketed in (False, True):
         sub = tmp_path / f"b{int(bucketed)}"
         base = CrawlDriver(spark, str(sub / "base"), CFG,
                            bucketed=bucketed, **FETCH_KW)
-        seen = CrawlDriver(spark, str(sub / "seen"),
-                           CFG.with_(use_url_seen=True),
+        seen = CrawlDriver(spark, str(sub / "seen"), cfg,
                            bucketed=bucketed, **FETCH_KW)
         for d in (base, seen):
             d.inject(seeds_df(spark), T0)
         for k in range(2):
-            t = T0 + 1000 + k * 3_600_000
+            t = T0 + 1000 + k * 31 * 86_400_000
+            parent = seen.frontier.current_id()
             base.run_cycle(k, t)
-            seen.run_cycle(k, t)
-            assert snap(base) == snap(seen), f"bucketed={bucketed} cycle {k}"
+            m = seen.run_cycle(k, t)
+            rows = snap(seen)
+            assert snap(base) == rows, f"bucketed={bucketed} cycle {k}"
+            assert len({r[0] for r in rows}) == len(rows)
+            exact, n_linked = _exact_new_links(spark, seen, parent)
+            assert m.new_links == exact, f"bucketed={bucketed} cycle {k}"
+            assert exact > 0
+            if k:  # refetched pages re-link urls the frontier holds
+                assert exact < n_linked
         assert os.path.exists(str(sub / "seen" / "url_seen_blooms"))
-
-
-def test_url_seen_cuckoo_backend_cycle_identity(spark, tmp_path):
-    """cfg.url_seen_backend='cuckoo' drives the whole loop through the
-    sharded cuckoo filters (north rule "bloom/cuckoo") — additions-ON,
-    multi-cycle, frontier IDENTICAL to the unfiltered plan; and a
-    mid-crawl backend switch triggers the one-time full shard rebuild
-    (self-describing shards: cuckoo rows carry ``table``)."""
-    import os
-
-    def snap(d):
-        return sorted(
-            (r.url, r.status, r.fetch_time, r.retries, float(r.score))
-            for r in d.frontier.read(spark).collect()
-        )
-
-    base = CrawlDriver(spark, str(tmp_path / "base"), CFG, **FETCH_KW)
-    ck = CrawlDriver(spark, str(tmp_path / "ck"),
-                     CFG.with_(use_url_seen=True,
-                               url_seen_backend="cuckoo"), **FETCH_KW)
-    for d in (base, ck):
-        d.inject(seeds_df(spark), T0)
-    for k in range(2):
-        t = T0 + 1000 + k * 3_600_000
-        base.run_cycle(k, t)
-        ck.run_cycle(k, t)
-        assert snap(base) == snap(ck), f"cycle {k}"
-    shards = spark.read.parquet(
-        os.path.join(str(tmp_path / "ck"), "url_seen_blooms"))
-    assert "table" in shards.columns          # cuckoo, not bloom, shards
-
-    # switch the SAME crawl back to bloom: next cycle must rebuild the
-    # store wholesale (no stale cuckoo shards left behind) and still
-    # match the unfiltered plan
-    ck.cfg = ck.cfg.with_(url_seen_backend="bloom")
-    t = T0 + 1000 + 2 * 3_600_000
-    base.run_cycle(2, t)
-    ck.run_cycle(2, t)
-    assert snap(base) == snap(ck)
-    shards = spark.read.parquet(
-        os.path.join(str(tmp_path / "ck"), "url_seen_blooms"))
-    assert "bits" in shards.columns and "table" not in shards.columns
+        # the gate picked the arm this case is named for
+        _, probed = seen._probe_seen(seen.frontier.read(spark).drop("bucket"))
+        plan = probed._jdf.queryExecution().optimizedPlan().toString()
+        cogroup = "FlatMapCoGroupsInPandas" in plan
+        assert cogroup == (max_bytes == 0), plan
 
 
 def test_free_generate(spark):

@@ -6,7 +6,6 @@ import json
 
 import pytest
 
-from coherencebot_spark.operators.seen import UrlSeenFilter
 from coherencebot_spark.schemas import FRONTIER
 from coherencebot_spark.sources.seeds import FeedInjector, read_seed_files
 from coherencebot_spark.sources.sinks import build_index_documents, write_csv
@@ -43,142 +42,65 @@ def test_feed_injector_parses_feed(spark):
         FeedInjector("https://api/feed").fetch_seeds(spark)
 
 
-def test_url_seen_filter(spark):
-    frontier = spark.createDataFrame(
-        [frow(f"https://h.example.org/p{i}") for i in range(500)], FRONTIER)
-    seen = UrlSeenFilter.from_frontier(spark, frontier, capacity=500, fpp=0.01)
-    links = spark.createDataFrame(
-        [(f"https://h.example.org/p{i}",) for i in range(400, 600)],
-        "url string",
-    )
-    kept = seen.drop_definitely_new(links)
-    kept_urls = {r.url for r in kept.collect()}
-    # no false negatives: every truly-seen url survives
-    for i in range(400, 500):
-        assert f"https://h.example.org/p{i}" in kept_urls
-    # most definitely-new urls are dropped (fpp ~1%)
-    new_kept = [u for u in kept_urls if int(u.rsplit("p", 1)[1]) >= 500]
-    assert len(new_kept) <= 10
-    assert seen.count_new(links) >= 90
-
-
-def test_sharded_url_seen_matches_monolithic(spark):
-    """Sharded (per-bucket, never-collected) blooms answer membership with
-    the same CONTRACT as the monolithic driver-broadcast filter over a
-    multi-bucket frontier: zero false negatives on every inserted URL, and
-    the definitely-new drop rate holds.  (Exact bit-for-bit equality is
-    not expected — shards use per-bucket m/k — the contract is what
-    updatedb relies on.)"""
-    from coherencebot_spark.operators.seen import ShardedUrlSeenFilter
-
-    # 40 hosts so URLs spread over many of the 16 buckets
-    frontier = spark.createDataFrame(
-        [frow(f"https://h{i % 40}.example.org/p{i}") for i in range(800)],
-        FRONTIER)
-    mono = UrlSeenFilter.from_frontier(spark, frontier, capacity=800, fpp=0.01)
-    shard = ShardedUrlSeenFilter.from_frontier(frontier, capacity=800,
-                                               n_buckets=16, fpp=0.01)
-    assert shard.blooms.count() > 4  # genuinely multi-bucket
-
-    links = spark.createDataFrame(
-        [(f"https://h{i % 40}.example.org/p{i}",) for i in range(600, 1000)],
-        "url string",
-    )
-    kept_mono = {r.url for r in mono.drop_definitely_new(links).collect()}
-    kept_shard = {r.url for r in shard.drop_definitely_new(links).collect()}
-    seen_urls = {f"https://h{i % 40}.example.org/p{i}" for i in range(600, 800)}
-    # no false negatives in either path
-    assert seen_urls <= kept_mono
-    assert seen_urls <= kept_shard
-    # definitely-new URLs are mostly dropped by both (fpp ~1% of 200)
-    assert len(kept_mono - seen_urls) <= 10
-    assert len(kept_shard - seen_urls) <= 10
-    assert shard.count_new(links) >= 180
-    shard.unpersist()
-
-
-def test_cuckoo_url_seen_and_remove(spark):
-    """Cuckoo backend: same no-false-negative contract as the bloom
-    shards, plus the operation the bloom can't do — remove() un-sees
-    purged URLs in place (frontier purge support) without touching any
-    surviving URL's membership."""
-    from coherencebot_spark.operators.seen import ShardedUrlSeenFilter
-
-    frontier = spark.createDataFrame(
-        [frow(f"https://h{i % 40}.example.org/p{i}") for i in range(800)],
-        FRONTIER)
-    cf = ShardedUrlSeenFilter.from_frontier(frontier, capacity=800,
-                                            n_buckets=16, backend="cuckoo")
-    assert cf.blooms.count() > 4
-
-    links = spark.createDataFrame(
-        [(f"https://h{i % 40}.example.org/p{i}",) for i in range(600, 1000)],
-        "url string")
-    kept = {r.url for r in cf.drop_definitely_new(links).collect()}
-    seen_urls = {f"https://h{i % 40}.example.org/p{i}"
-                 for i in range(600, 800)}
-    assert seen_urls <= kept                      # no false negatives
-    # cuckoo fpp ≈ 0.012% — definitely-new URLs essentially all drop
-    assert len(kept - seen_urls) <= 2
-
-    # purge p600-p699: after remove() they read definitely-new again,
-    # every survivor stays seen
-    purged = spark.createDataFrame(
-        [(f"https://h{i % 40}.example.org/p{i}",) for i in range(600, 700)],
-        "url string")
-    cf2 = cf.remove(purged)
-    kept2 = {r.url for r in cf2.drop_definitely_new(links).collect()}
-    survivors = {f"https://h{i % 40}.example.org/p{i}"
-                 for i in range(700, 800)}
-    assert survivors <= kept2                     # survivors untouched
-    purged_set = {f"https://h{i % 40}.example.org/p{i}"
-                  for i in range(600, 700)}
-    assert len(kept2 & purged_set) <= 2           # purged are unseen now
-    cf2.unpersist()
-
-    # bloom backend refuses remove() with an actionable error
-    bl = ShardedUrlSeenFilter.from_frontier(frontier, capacity=800,
-                                            n_buckets=16, backend="bloom")
-    with pytest.raises(ValueError, match="cuckoo"):
-        bl.remove(purged)
-    bl.unpersist()
-
-
-def test_cuckoo_sharded_survives_host_skew(spark):
-    """Host-aligned buckets are skewed: one bucket can hold many times
-    ``capacity // n_buckets`` URLs.  Each shard sizes its table from its
-    OWN row count, so a hot bucket builds instead of exhausting the
-    eviction walk (the failure mode a global split had), and the shard
-    schema's per-row ``nb`` lets shard sizes differ."""
-    from coherencebot_spark.functions.hashing import (
-        CuckooFilter, build_cuckoo_sharded, cuckoo_contains_sharded)
-
-    # 4000 URLs on ONE host (one bucket), 16 buckets, capacity hint says
-    # 4000/16 = 250 per shard — 16x under the hot bucket's true load
+def _seen_shards_and_probe(spark):
+    """Per-host-bucket Bloom shards (the crawl's URL-seen layout) over 800
+    frontier URLs, and a probe of 200 inserted, 200 definitely-new and 40
+    URLs whose bucket may have no shard."""
     from pyspark.sql import functions as F
+
+    from coherencebot_spark.functions.hashing import build_bloom_sharded
 
     hostb = F.pmod(F.xxhash64(F.col("host")), F.lit(16)).cast("int")
     frontier = spark.createDataFrame(
-        [frow(f"https://hot.example.org/p{i}") for i in range(4000)],
+        [frow(f"https://h{i % 10}.example.org/p{i}") for i in range(800)],
         FRONTIER)
-    shards = build_cuckoo_sharded(frontier, "url", capacity=4000,
-                                  n_buckets=16, bucket_expr=hostb)
-    rows = shards.collect()
-    assert len(rows) == 1                      # one host → one bucket
-    # sized from the shard's rows, not the global split
-    assert rows[0].nb >= CuckooFilter.params(4000)
+    shards = build_bloom_sharded(frontier, "url", capacity=800, n_buckets=16,
+                                 bucket_expr=hostb)
     probe = spark.createDataFrame(
-        [(f"https://hot.example.org/p{i}", "hot.example.org")
-         for i in range(0, 8000, 2)],
+        [_page(i) for i in range(600, 1000)]
+        + [(f"https://z{j}.example.org/", f"z{j}.example.org")
+           for j in range(40)],
         "url string, host string")
-    got = {r.url: r.maybe_seen
-           for r in cuckoo_contains_sharded(probe, "url", shards,
-                                            n_buckets=16,
-                                            bucket_expr=hostb).collect()}
-    inserted = {u for u in got if int(u.rsplit("p", 1)[1]) < 4000}
-    assert all(got[u] for u in inserted)       # no false negatives
-    fresh = [u for u in got if u not in inserted]
-    assert sum(got[u] for u in fresh) <= 2     # fpp stays tiny
+    return shards, probe, dict(n_buckets=16, bucket_expr=hostb)
+
+
+def _page(i):
+    return (f"https://h{i % 10}.example.org/p{i}", f"h{i % 10}.example.org")
+
+
+def test_url_seen_filter(spark):
+    """Bloom shards: zero false negatives on inserted URLs, a probe whose
+    bucket has no shard is definitely-new, and definitely-new URLs mostly
+    read as new (fpp 1%)."""
+    from coherencebot_spark.functions.hashing import bloom_contains_sharded
+
+    shards, probe, kw = _seen_shards_and_probe(spark)
+    have = {r.bucket for r in shards.select("bucket").collect()}
+    assert 4 < len(have) < 16          # multi-bucket, some buckets empty
+
+    seen = {r.url: r.maybe_seen for r in
+            bloom_contains_sharded(probe, "url", shards, **kw).collect()}
+    assert len(seen) == 440
+    assert all(seen[_page(i)[0]] for i in range(600, 800))
+    assert sum(seen[_page(i)[0]] for i in range(800, 1000)) <= 10
+    orphan = [r.url for r in
+              probe.filter(~kw["bucket_expr"].isin(sorted(have))).collect()]
+    assert orphan and not any(seen[u] for u in orphan)
+
+
+def test_sharded_url_seen_matches_monolithic(spark):
+    """The per-bucket cogroup probe and the broadcast probe (all shards
+    collected into one driver-side map) return identical ``maybe_seen``."""
+    from coherencebot_spark.functions.hashing import (
+        bloom_contains_broadcast, bloom_contains_sharded)
+
+    shards, probe, kw = _seen_shards_and_probe(spark)
+    cogroup = {r.url: r.maybe_seen for r in
+               bloom_contains_sharded(probe, "url", shards, **kw).collect()}
+    broadcast = {r.url: r.maybe_seen for r in
+                 bloom_contains_broadcast(probe, "url", shards, **kw).collect()}
+    assert cogroup == broadcast and len(cogroup) == 440
+    assert any(cogroup.values()) and not all(cogroup.values())
 
 
 def test_elastic_bulk_round_trip(spark, tmp_path):
@@ -280,16 +202,6 @@ def test_kafka_sink_gated_with_actionable_error(spark):
     df = spark.createDataFrame([("u1", 1)], "url string, status int")
     with pytest.raises(RuntimeError, match="--packages"):
         write_kafka(df, "localhost:9092", "t")
-
-
-def test_monolithic_bloom_capacity_guard(spark):
-    # VERDICT r3 #9: the driver-bitmap bloom must be unreachable at scale —
-    # the sharded builder is the single production API
-    import pytest as _pytest
-
-    frontier = spark.range(10).selectExpr("concat('http://h/', id) as url")
-    with _pytest.raises(ValueError, match="build_bloom_sharded"):
-        UrlSeenFilter.from_frontier(spark, frontier, capacity=10_000_000_000)
 
 
 def test_file_dumper(spark, tmp_path):
